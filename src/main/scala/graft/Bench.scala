@@ -230,17 +230,9 @@ object Bench {
     // stopping a session the bench didn't create would kill every suite
     // that runs after it in the forked JVM
     val ownsSession = SparkSession.getDefaultSession.isEmpty
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     // ERROR, not WARN: the r15 round artifact's whole 2000-char tail was
     // localCheckpoint WARN spam — any tail capture must carry timings
-    spark.sparkContext.setLogLevel("ERROR")
-    org.apache.spark.sql.graft.GraftFunctions.installOptimizations(spark)
+    val spark = DevSession("ERROR", cpus = cpus)
     // Per-query warm-up run: whole-stage codegen compiles each query's
     // generated classes on first execution (measured at 3-18s of pure
     // Janino/JIT time on the heavier plans) — steady-state throughput is

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `explain("formatted")` for a list of registered queries to
   * `<outDir>/<name>.txt` — the plans/r21 before/after capture harness.
   * Usage: runMain graft.PlanDump <outDir> <sfDir> <name> [name ...]
@@ -16,16 +14,7 @@ object PlanDump {
     java.nio.file.Files.createDirectories(outDir)
     val sfDir = args(1)
     val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    org.apache.spark.sql.graft.GraftFunctions.installOptimizations(spark)
+    val spark = DevSession("ERROR")
     names.foreach { name =>
       try {
         val df = SparkEntry.queries(name)(spark, sfDir)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 
 /** Dev utility: run one registered query (steady-state, noop sink) with a
@@ -13,26 +12,17 @@ object ProfJobs {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.ui.enabled", "false")
     // extra A/B confs: SPARK_GRAFT_PROF_CONF="k=v;k=v" (dev-only knob)
-    sys.env.get("SPARK_GRAFT_PROF_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); b.config(k, v)
-    })
-    val spark = b.getOrCreate()
+    val spark = DevSession("ERROR",
+      sys.env.get("SPARK_GRAFT_PROF_CONF").toSeq.flatMap(_.split(";")).map { kv =>
+        val Array(k, v) = kv.split("=", 2); k -> v
+      })
     if (sys.env.contains("SPARK_GRAFT_PROF_NOCRC")) {
       val fs = org.apache.hadoop.fs.FileSystem.get(
         new java.net.URI("file:///"), spark.sparkContext.hadoopConfiguration)
       fs.setWriteChecksum(false)
       fs.setVerifyChecksum(false)
     }
-    spark.sparkContext.setLogLevel("ERROR")
-    org.apache.spark.sql.graft.GraftFunctions.installOptimizations(spark)
     val fn = SparkEntry.queries(name)
     // warm-up (codegen/JIT), same protocol as Bench
     fn(spark, sfDir).write.format("noop").mode("overwrite").save()

@@ -3,7 +3,7 @@ package graft.sources
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -325,10 +325,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
     // spec plus every historical one (evolution keeps old dirs pruning
     // under their own spec — renaming/dropping a source column would
     // orphan that mapping AND strand the rendered spec at a dead name)
-    val specRenders: Seq[String] = cur.flatMap(_.partCol).toSeq ++
-      cur.map(d => PartSpecs.parseHistory(d.props)).getOrElse(Nil)
     val specs: Seq[PartSpec] =
-      try specRenders.map(r => PartSpec.parse(r, schema))
+      try cur.toSeq.flatMap(_.partSpecs)
       catch { case _: Exception => Seq.empty } // sidecar-less legacy fallback below
     val specLeaves: Seq[PartSpec] = specs.flatMap(_.leaves)
     val specSources: Set[String] =
@@ -741,7 +739,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
       // per LEAF on both sides: a composite field may not reuse a dir
       // column any historical spec's field derived differently (dir→spec
       // resolution is by segment column name)
-      val histLeaves = newHistory.flatMap(r => PartSpec.parse(r, sch).leaves)
+      val histLeaves = d.partSpecs.filterNot(_.render == s.render).flatMap(_.leaves)
       s.leaves.foreach { leaf =>
         val clash = histLeaves.find(h =>
           h.physName == leaf.physName && h.render != leaf.render)
@@ -778,7 +776,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
     // memoized manifest bodies (the (mtime,len) validator alone has a
     // 1 ms blind spot)
     ManifestTable.invalidateBodyCache(p.toString)
-    PartSpecs.invalidate(root)
+    GraftDdl.invalidate(fs, p)
     if (!isTable(root)) false else fs.delete(p, true)
   }
 
@@ -790,6 +788,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
     val dst = new Path(rootOf(newIdent))
     fs.mkdirs(dst.getParent)
     require(fs.rename(src, dst), s"rename $src -> $dst failed")
+    GraftDdl.invalidate(fs, src)
+    GraftDdl.invalidate(fs, dst)
   }
 
   // ---------------------------- procedures -----------------------------
@@ -1106,105 +1106,22 @@ private[sources] object FieldIds {
       }.toIndexedSeq: _*)
     }
 
-  // (mtime, len) of the _ddl.json the memoized ids were parsed from — one
-  // getFileStatus validates a hit, so the per-read/per-commit seam in
-  // [[ManifestTable]] never re-lists or re-parses on the hot path. Same-
-  // process sidecar rewrites also invalidate explicitly ([[GraftDdl.save]]);
-  // the stamp covers cross-path writers and other processes.
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, ((Long, Long), Map[String, Int])]()
-
-  def invalidate(root: String): Unit = memo.remove(root)
-
   /** The declared field ids of the table at `root` — `Map.empty` for
-    * id-less (pre-field-id or path-first) tables. This is THE seam every
-    * [[ManifestTable]] data read and write consults, so whichever path
-    * produced a frame (catalog INSERT, streaming sink, CDC replicate,
-    * programmatic commit, compaction) the table's files stay uniformly
-    * id-annotated and its reads id-resolved: ONE id-less data file in an
-    * id-carrying table would fail every later read (the reader refuses
-    * missing ids rather than silently matching by name). Enabling the
+    * id-less (pre-field-id or path-first) tables. Every [[ManifestTable]]
+    * data read and write consults this, so whichever path produced a frame
+    * (catalog INSERT, streaming sink, CDC replicate, programmatic commit,
+    * compaction) the table's files stay uniformly id-annotated and its
+    * reads id-resolved: ONE id-less data file in an id-carrying table would
+    * fail every later read (the reader refuses missing ids rather than
+    * silently matching by name). The ids come from [[GraftDdl.load]]'s
+    * resolved sidecar, which owns the memo and the refusals that keep a
+    * transiently unreadable sidecar from passing as id-less. Enabling the
     * session's by-id parquet resolution rides along the first id hit, so
     * programmatic readers that never initialized a catalog still resolve
     * renamed columns correctly.
     */
-  def of(spark: SparkSession, root: String): Map[String, Int] = {
-    val p = new Path(root, GraftDdl.FileName)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stamp =
-      try { val st = fs.getFileStatus(p); (st.getModificationTime, st.getLen) }
-      catch { case _: java.io.FileNotFoundException => (-1L, -1L) }
-    memo.get(root) match {
-      case (`stamp`, ids) => enable(spark, ids)
-      case prev =>
-        // full load (staged-#ddl authority + self-healing promote included)
-        // only on miss — i.e. first touch per process, or a sidecar change
-        def statNow(): (Long, Long) =
-          try { val st = fs.getFileStatus(p); (st.getModificationTime, st.getLen) }
-          catch { case _: java.io.FileNotFoundException => (-1L, -1L) }
-        // None = the sidecar existed at stat time but the load missed it
-        // (or vice versa) — a transient stat-vs-load disagreement, never a
-        // steady state. Some(empty) = genuinely id-less (path-first root,
-        // or a declared pre-field-id table) — the common case, zero retries.
-        def loadNow(st: (Long, Long)): Option[Map[String, Int]] =
-          if (st == (-1L, -1L) && !hasStaged(fs, root)) Some(Map.empty[String, Int])
-          else GraftDdl.load(spark, root).map(d => parse(d.props))
-        // An id-carrying table's sidecar cannot legitimately become id-less
-        // mid-process: an empty/missing read here means a CONCURRENT
-        // ALTER's install is inside its replacement window in another JVM
-        // (found by the two-JVM ALTER race, r20 — the insert that lost
-        // this race wrote ONE id-less file and bricked every later read of
-        // the table). Wait out the window; if the sidecar truly vanished,
-        // failing the write loudly beats poisoning the table.
-        val prevIds = Option(prev).map(_._2).getOrElse(Map.empty[String, Int])
-        var st = stamp
-        var loaded = loadNow(st)
-        var attempt = 0
-        while (attempt < 5 &&
-            (loaded.isEmpty || (loaded.get.isEmpty && prevIds.nonEmpty))) {
-          attempt += 1
-          Thread.sleep(20L * attempt)
-          st = statNow()
-          loaded = loadNow(st)
-        }
-        // loaded == None after every retry while the stat stamp STILL says
-        // the sidecar exists is the same poisoning hazard with no prior
-        // memo (ADVICE r20): a first-touch process falling back to
-        // Map.empty here would memoize "id-less" under the current stamp
-        // and write the one id-less file that bricks every later read —
-        // refuse loudly instead. The Map.empty fallback stays only for the
-        // genuinely sidecar-less root: no _ddl.json at final stat (an
-        // orphan staged .ddl-*.json with no manifest directive is
-        // pre-publish crash debris, not authority — vacuum sweeps it).
-        // hasStaged: ids may live ONLY in a staged-#ddl directive while the
-        // published sidecar is still absent — a persistent load failure
-        // there is the same poisoning hazard, not a sidecar-less root
-        // (ADVICE r21)
-        if (loaded.isEmpty && (st != (-1L, -1L) || hasStaged(fs, root)))
-          throw new IllegalStateException(
-            s"field-id sidecar for $root is unreadable: ${GraftDdl.FileName} " +
-              "(or its staged-#ddl authority) exists but did not load after " +
-              "retries — refusing to guess an id-less schema (one id-less " +
-              "data file would fail every later read of an id-carrying table)")
-        val ids = loaded.getOrElse(Map.empty)
-        if (ids.isEmpty && prevIds.nonEmpty)
-          throw new IllegalStateException(
-            s"field-id sidecar for $root vanished: the table declared field ids " +
-              s"(${prevIds.size} columns) but ${GraftDdl.FileName} is unreadable " +
-              "after retries — refusing to proceed with an id-less schema (one " +
-              "id-less data file would fail every later read of this table)")
-        memo.put(root, (st, ids))
-        enable(spark, ids)
-    }
-  }
-
-  private def hasStaged(fs: FileSystem, root: String): Boolean = {
-    val rootP = new Path(root)
-    fs.exists(rootP) && fs.listStatus(rootP).exists { st =>
-      val n = st.getPath.getName
-      n.startsWith(GraftDdl.StagedPrefix) && n.endsWith(".json")
-    }
-  }
+  def of(spark: SparkSession, root: String): Map[String, Int] =
+    enable(spark, GraftDdl.load(spark, root).map(_.fieldIds).getOrElse(Map.empty))
 
   private def enable(spark: SparkSession, ids: Map[String, Int]): Map[String, Int] = {
     if (ids.nonEmpty &&
@@ -1214,28 +1131,6 @@ private[sources] object FieldIds {
   }
 }
 
-/** The `_ddl.json` table-metadata sidecar: declared schema (column ORDER
-  * and types as written in CREATE TABLE), partition column, and table
-  * properties (`statsCols` / `bloomCols` feed every commit's skipping
-  * sidecars). Tables created path-first (no sidecar) are still loadable —
-  * schema and partition column fall back to the manifest's own inference.
-  *
-  * RTAS atomicity (ADVICE r15): an RTAS that publishes the new snapshot
-  * manifest FIRST and installs the sidecar SECOND has a crash window that
-  * leaves the table PERMANENTLY serving new data through the old declared
-  * schema. The fix is Delta's metaData-action-in-log pattern, adapted to
-  * the sidecar: the new DDL is [[stage]]d under an invisible unique
-  * `.ddl-*.json` name inside the FINAL table root, the adoptSnapshot
-  * manifest carries a `#ddl\t<staged name>` directive, and the ONE atomic
-  * manifest rename flips data and schema together — [[load]] treats the
-  * newest retained manifest's `#ddl` directive as authoritative while its
-  * staged file still exists, and PROMOTES it (install `_ddl.json`, delete
-  * the staged file) as a self-healing step, after which the sidecar is
-  * authoritative again (so later ALTERs, which rewrite only the sidecar,
-  * are never shadowed). A staged file named by no manifest (crashed or
-  * aborted RTAS that never committed) is inert debris; a staged file
-  * OLDER than the newest `#ddl` directive can never regain authority.
-  */
 /** Column DEFAULT values (`ADD COLUMN d INT DEFAULT 7`,
   * `ALTER COLUMN d SET/DROP DEFAULT`): the two Spark metadata keys —
   * `CURRENT_DEFAULT` (what future INSERTs fill when the column is
@@ -1356,12 +1251,59 @@ object Checks {
   }
 }
 
+/** The `_ddl.json` table-metadata sidecar: declared schema (column ORDER
+  * and types as written in CREATE TABLE), partition column, and table
+  * properties (`statsCols` / `bloomCols` feed every commit's skipping
+  * sidecars). Tables created path-first (no sidecar) are still loadable —
+  * schema and partition column fall back to the manifest's own inference.
+  *
+  * RTAS atomicity (ADVICE r15): an RTAS that publishes the new snapshot
+  * manifest FIRST and installs the sidecar SECOND has a crash window that
+  * leaves the table PERMANENTLY serving new data through the old declared
+  * schema. The fix is Delta's metaData-action-in-log pattern, adapted to
+  * the sidecar: the new DDL is [[stage]]d under an invisible unique
+  * `.ddl-*.json` name inside the FINAL table root, the adoptSnapshot
+  * manifest carries a `#ddl\t<staged name>` directive, and the ONE atomic
+  * manifest rename flips data and schema together — [[load]] treats the
+  * newest retained manifest's `#ddl` directive as authoritative while its
+  * staged file still exists, and PROMOTES it (install `_ddl.json`, delete
+  * the staged file) as a self-healing step, after which the sidecar is
+  * authoritative again (so later ALTERs, which rewrite only the sidecar,
+  * are never shadowed). A staged file named by no manifest (crashed or
+  * aborted RTAS that never committed) is inert debris; a staged file
+  * OLDER than the newest `#ddl` directive can never regain authority.
+  *
+  * THE AUTHORITY RULE lives here and only here: the newest retained
+  * manifest's `#ddl` directive wins if its staged file exists; otherwise
+  * `_ddl.json`; otherwise the table has no DDL. [[load]] memoizes the
+  * resolved [[Ddl]] (with its parsed field ids and partition specs) per
+  * qualified root, validated by everything the rule reads — one root
+  * listing yields `_ddl.json`'s (mtime, len), the staged names and, when
+  * any are staged, the newest manifest number — so a change made by any
+  * process re-resolves, and in-process writers also [[invalidate]].
+  */
 private[sources] object GraftDdl {
   val FileName = "_ddl.json"
   val StagedPrefix = ".ddl-"
 
   final case class Ddl(schema: Option[StructType], partCol: Option[String],
-                       props: Map[String, String])
+                       props: Map[String, String]) {
+    /** Declared field ids ([[FieldIds]]) — empty for id-less tables. */
+    lazy val fieldIds: Map[String, Int] = FieldIds.parse(props)
+
+    /** The ACTIVE partition spec, parsed from `partCol`'s rendered form
+      * against the declared schema — None = declared unpartitioned.
+      */
+    lazy val partSpec: Option[PartSpec] =
+      for { s <- schema; r <- partCol } yield PartSpec.parse(r, s)
+
+    /** Current-first: the active spec (if any), then the history (newest
+      * first). Pruning matches directories against ALL of them by
+      * physical column name.
+      */
+    lazy val partSpecs: Seq[PartSpec] = partSpec.toSeq ++
+      schema.toSeq.flatMap(s => PartSpecs.parseHistory(props).map(PartSpec.parse(_, s)))
+  }
 
   private def render(schema: StructType, partCol: Option[String],
                      props: Map[String, String]): Array[Byte] = {
@@ -1385,7 +1327,7 @@ private[sources] object GraftDdl {
     Ddl(schema, partCol, props)
   }
 
-  private def readBytes(fs: org.apache.hadoop.fs.FileSystem, p: Path): Array[Byte] = {
+  private def readBytes(fs: FileSystem, p: Path): Array[Byte] = {
     val in = fs.open(p)
     try {
       val buf = new java.io.ByteArrayOutputStream()
@@ -1434,8 +1376,7 @@ private[sources] object GraftDdl {
             (if (old.isDefined) " (previous sidecar re-installed)" else ""))
       }
     }
-    FieldIds.invalidate(root)
-    PartSpecs.invalidate(root)
+    invalidate(fs, new Path(root))
   }
 
   /** Write the DDL under a unique invisible staged name inside `root` and
@@ -1452,32 +1393,6 @@ private[sources] object GraftDdl {
     name
   }
 
-  /** The staged-DDL authority, if one is live: the NEWEST retained
-    * manifest carrying a `#ddl` directive whose staged file still exists
-    * (i.e. an RTAS committed but its sidecar promotion has not completed).
-    * Gated on a cheap staged-file listing so the common no-RTAS load never
-    * scans manifests.
-    */
-  private def stagedAuthority(spark: SparkSession, root: String): Option[(Path, Ddl)] = {
-    val rootP = new Path(root)
-    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(rootP)) return None
-    val stagedNames = fs.listStatus(rootP).map(_.getPath.getName)
-      .filter(n => n.startsWith(StagedPrefix) && n.endsWith(".json")).toSet
-    if (stagedNames.isEmpty) return None
-    ManifestTable.versions(spark, root).reverseIterator
-      .flatMap(v => ManifestTable.directiveOf(spark, root, v, "ddl"))
-      .nextOption()                       // ONLY the newest directive counts
-      .filter(stagedNames.contains)       // promoted already -> sidecar rules
-      .flatMap { name =>
-        val p = new Path(rootP, name)
-        // a CONCURRENT loader can promote-and-delete between our listing
-        // and this read — by then the sidecar it installed is authoritative
-        try Some((p, parse(readBytes(fs, p))))
-        catch { case _: java.io.FileNotFoundException => None }
-      }
-  }
-
   /** Parse a STAGED sidecar by name without promoting it — the write
     * seam's lookahead for commits that flip the schema atomically with
     * their own `#ddl` directive ([[ManifestTable.fieldIdsForWrite]]): the
@@ -1491,41 +1406,114 @@ private[sources] object GraftDdl {
     if (!fs.exists(p)) None else Some(parse(readBytes(fs, p)))
   }
 
+  /** Everything the authority rule reads, from ONE root listing:
+    * `_ddl.json`'s (mtime, len), the staged `.ddl-*.json` names and — only
+    * when some are staged, since only then can a directive matter — the
+    * manifest numbers (ascending), whose newest `#ddl` directive decides.
+    */
+  private final case class Stamp(sidecar: Option[(Long, Long)], staged: Set[String],
+                                 manifests: Seq[Long])
+
+  private val memo = new java.util.concurrent.ConcurrentHashMap[String, (Stamp, Option[Ddl])]()
+
+  /** Forget `root`'s resolved DDL: called by [[save]], by a commit that
+    * carries a `#ddl` directive, and by table drops and renames.
+    */
+  def invalidate(fs: FileSystem, root: Path): Unit =
+    memo.remove(fs.makeQualified(root).toString)
+
+  private def listRoot(fs: FileSystem, rootP: Path): Stamp = {
+    val listing =
+      try fs.listStatus(rootP)
+      catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+    val names = listing.map(_.getPath.getName)
+    val staged = names.filter(n => n.startsWith(StagedPrefix) && n.endsWith(".json")).toSet
+    val manifests =
+      if (staged.isEmpty) Nil
+      else names.toSeq.filter(_.startsWith(ManifestTable.ManifestPrefix))
+        .flatMap(_.stripPrefix(ManifestTable.ManifestPrefix).toLongOption).sorted
+    val sidecar = listing.find(_.getPath.getName == FileName)
+      .map(st => (st.getModificationTime, st.getLen))
+    Stamp(sidecar, staged, manifests)
+  }
+
+  /** Apply the authority rule to one listing: Some((ddl, staged path if
+    * the authority is a staged file)), or None when the listed authority
+    * did not read — a transient the caller retries (a concurrent promote
+    * deleted the staged file, a vacuum removed a listed manifest, or
+    * Hadoop's LocalFileSystem moved a fresh sidecar's `.crc` shadow
+    * separately from the data file and the read hit a ChecksumException).
+    */
+  private def resolve(spark: SparkSession, fs: FileSystem, rootP: Path,
+                      stamp: Stamp): Option[(Option[Ddl], Option[Path])] =
+    try {
+      val directive = stamp.manifests.reverseIterator
+        .flatMap(v => ManifestTable.directiveOf(spark, rootP.toString, v, "ddl"))
+        .nextOption()                        // ONLY the newest directive counts
+        .filter(stamp.staged.contains)       // promoted already -> sidecar rules
+      directive match {
+        case Some(name) =>
+          val p = new Path(rootP, name)
+          Some((Some(parse(readBytes(fs, p))), Some(p)))
+        case None if stamp.sidecar.isDefined =>
+          Some((Some(parse(readBytes(fs, new Path(rootP, FileName)))), None))
+        case None => Some((None, None))
+      }
+    } catch { case _: java.io.IOException => None }
+
+  /** The authoritative DDL of `root` (see the rule above), or None for a
+    * sidecar-less table. A memo hit costs one root listing.
+    *
+    * Two refusals guard the write path: one id-less data file in an
+    * id-carrying table fails every later read, so an unreadable authority
+    * must never pass as "no DDL". (1) The listing names an authority that
+    * still does not read after a short bounded retry. (2) A table whose
+    * previously resolved DDL declared field ids now resolves without
+    * them — an id-carrying sidecar cannot legitimately become id-less
+    * mid-process (in-process rewrites [[invalidate]] first), so this is a
+    * concurrent install's replacement window in another JVM (found by
+    * the two-JVM ALTER race) or a sidecar that truly vanished.
+    */
   def load(spark: SparkSession, root: String): Option[Ddl] = {
-    stagedAuthority(spark, root) match {
-      case Some((stagedP, d)) =>
-        // promote: install the sidecar, then retire the staged authority —
-        // self-heals the crash window between the RTAS manifest rename and
-        // sidecar install. Failure to promote (read-only reader) still
-        // serves the correct schema from the staged copy.
-        try {
-          d.schema.foreach(s => save(spark, root, s, d.partCol, d.props))
-          val fs = stagedP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          fs.delete(stagedP, false)
-        } catch { case scala.util.control.NonFatal(_) => () }
-        Some(d)
-      case None =>
-        val p = new Path(root, FileName)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // TRANSIENT-read tolerance (r18, found by the two-JVM ALTER race):
-        // the sidecar install is one atomic data-file rename, but
-        // Hadoop's LocalFileSystem moves the `.crc` shadow SEPARATELY — a
-        // reader landing between the two sees a ChecksumException (and an
-        // object store's eventual list could briefly miss the fresh
-        // rename). The file is tiny and the install atomic, so a short
-        // bounded retry always converges to a complete old or new body.
-        var attempt = 0
-        while (true) {
-          try {
-            return if (!fs.exists(p)) None else Some(parse(readBytes(fs, p)))
-          } catch {
-            case e: java.io.IOException if attempt < 5 =>
-              attempt += 1
-              Thread.sleep(20L * attempt)
-          }
-        }
-        None // unreachable
+    val rootP = new Path(root)
+    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val key = fs.makeQualified(rootP).toString
+    var stamp = listRoot(fs, rootP)
+    val prev = memo.get(key)
+    if (prev != null && prev._1 == stamp) return prev._2
+    val prevIds = Option(prev).flatMap(_._2).map(_.fieldIds).getOrElse(Map.empty[String, Int])
+    def lostIds(r: Option[(Option[Ddl], Option[Path])]): Boolean =
+      prevIds.nonEmpty && r.exists(_._1.forall(_.fieldIds.isEmpty))
+    var got = resolve(spark, fs, rootP, stamp)
+    var attempt = 0
+    while (attempt < 5 && (got.isEmpty || lostIds(got))) {
+      attempt += 1
+      Thread.sleep(20L * attempt)
+      stamp = listRoot(fs, rootP)
+      got = resolve(spark, fs, rootP, stamp)
     }
+    val (ddl, stagedP) = got.getOrElse(throw new IllegalStateException(
+      s"DDL sidecar for $root is unreadable: $FileName (or its staged-#ddl authority) " +
+        "exists but did not load after retries — refusing to guess an id-less schema " +
+        "(one id-less data file would fail every later read of an id-carrying table)"))
+    if (lostIds(got)) throw new IllegalStateException(
+      s"field-id sidecar for $root vanished: the table declared field ids " +
+        s"(${prevIds.size} columns) but its DDL resolves without them after retries — " +
+        "refusing to proceed with an id-less schema (one id-less data file would fail " +
+        "every later read of this table)")
+    memo.put(key, (stamp, ddl))
+    // promote a staged authority: install the sidecar, then retire the
+    // staged file — self-heals the crash window between the RTAS manifest
+    // rename and sidecar install ([[save]] invalidates the entry just
+    // memoized). Failure to promote (read-only reader) still serves the
+    // correct schema from the staged copy.
+    for (p <- stagedP; d <- ddl) {
+      try {
+        d.schema.foreach(s => save(spark, root, s, d.partCol, d.props))
+        fs.delete(p, false)
+      } catch { case scala.util.control.NonFatal(_) => () }
+    }
+    ddl
   }
 }
 
@@ -1567,7 +1555,7 @@ class GraftV2Table(val root: String, displayName: String, asOf: Option[Long])
 
   /** Field ids ([[FieldIds]]) — empty for pre-field-id tables. */
   private[sources] lazy val fieldIds: Map[String, Int] =
-    FieldIds.parse(ddl.map(_.props).getOrElse(Map.empty))
+    ddl.map(_.fieldIds).getOrElse(Map.empty)
 
   /** The schema every read/write seam hands to parquet: declared names
     * plus `parquet.field.id` metadata, so files written under since-renamed
@@ -1588,7 +1576,7 @@ class GraftV2Table(val root: String, displayName: String, asOf: Option[Long])
     // table is (or evolved to be) unpartitioned — falling through to the
     // manifest-dir recovery would resurrect an evolved-away layout's
     // derived column as a phantom identity spec
-    case Some(d) => d.partCol.map(r => PartSpec.parse(r, d.schema.getOrElse(idSchema)))
+    case Some(d) => d.partSpec
     case None => ManifestTable.partitionColumn(spark, root).map(PartSpec.Identity)
   }
 
@@ -1763,7 +1751,7 @@ private[sources] class StagedGraftTable(ident: Identifier, stagingRoot: String,
           val empty = spark.createDataFrame(
             spark.sparkContext.emptyRDD[Row], ddl.schema.get)
           ManifestTable.commitSpec(empty, finalRoot,
-            ddl.partCol.map(r => PartSpec.parse(r, ddl.schema.get)),
+            ddl.partSpec,
             carryForward = false)
         }
       } catch {

@@ -246,9 +246,7 @@ class GraftSource extends RelationProvider with SchemaRelationProvider
       GraftDdl.save(sqlContext.sparkSession, r, data1.schema,
         optSpec.map(_.render), Map.empty)
     val ddlOpt = GraftDdl.load(sqlContext.sparkSession, r)
-    val spec: Option[PartSpec] = optSpec
-      .orElse(ddlOpt.flatMap(d =>
-        for { sch <- d.schema; rd <- d.partCol } yield PartSpec.parse(rd, sch)))
+    val spec: Option[PartSpec] = optSpec.orElse(ddlOpt.flatMap(_.partSpec))
     val data = Checks.enforce(data1, ddlOpt.map(_.props).getOrElse(Map.empty))
     val statsCols = parameters.get("statsCols").map(_.split(",").toSeq).getOrElse(Nil)
     val bloomCols = parameters.get("bloomCols").map(_.split(",").toSeq).getOrElse(Nil)
@@ -308,8 +306,7 @@ final case class GraftRelation(sqlContext: SQLContext, root: String,
     val aligned = Checks.enforce(data.toDF(schema.fieldNames.toIndexedSeq: _*),
       ddlOpt.map(_.props).getOrElse(Map.empty))
     val spec = ddlOpt match {
-      case Some(d) => for { sch <- d.schema; r <- d.partCol }
-        yield PartSpec.parse(r, sch)
+      case Some(d) => d.partSpec
       case None => ManifestTable.partitionColumn(spark, root).map(PartSpec.Identity)
     }
     if (overwrite)

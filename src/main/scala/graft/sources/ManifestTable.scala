@@ -38,7 +38,7 @@ import org.apache.spark.sql.types.StructType
   */
 object ManifestTable {
 
-  private val ManifestPrefix = "_manifest."
+  private[sources] val ManifestPrefix = "_manifest."
   private val StatsPrefix = "_stats."
   private val NdvPrefix = "_ndv."
   private def fmt(v: Long) = f"$v%08d"
@@ -218,19 +218,19 @@ object ManifestTable {
   }
 
   /** The field-id map a COMMIT must attach to the data it writes
-    * ([[FieldIds.attachDf]] seam): normally the live sidecar's
-    * ([[FieldIds.of]]), but a commit carrying a `#ddl` directive flips the
-    * schema ATOMICALLY with its own manifest rename (the RTAS adopt /
-    * torn-flip shape) — the staged sidecar it names becomes authoritative
-    * the instant this commit lands, so the data must carry the STAGED
-    * map's ids; attaching the dying map would refuse the new columns as
-    * schema drift (r18).
+    * ([[FieldIds.attachDf]] seam): normally the authoritative DDL's
+    * ([[FieldIds.of]], resolved by [[GraftDdl.load]]), but a commit
+    * carrying a `#ddl` directive flips the schema ATOMICALLY with its own
+    * manifest rename (the RTAS adopt / torn-flip shape) — the staged
+    * sidecar it names becomes authoritative the instant this commit lands,
+    * so the data must carry the STAGED map's ids; attaching the dying map
+    * would refuse the new columns as schema drift (r18).
     */
   private def fieldIdsForWrite(spark: SparkSession, root: String): Map[String, Int] =
     commitDirectives.value
       .find(_.startsWith("#ddl\t")).map(_.stripPrefix("#ddl\t"))
       .flatMap(name => GraftDdl.loadStaged(spark, root, name))
-      .map(d => FieldIds.parse(d.props))
+      .map(_.fieldIds)
       .getOrElse(FieldIds.of(spark, root))
 
   /** ANN-index lifecycle base pointer (VERDICT r17 #2): an index table
@@ -374,6 +374,8 @@ object ManifestTable {
     // (direct ManifestTable users, test temp-dir reuse) that bypass
     // GraftCatalog.dropTable's explicit invalidation.
     if (v == 1L) invalidateBodyCache(rootP.toString)
+    // a `#ddl` directive moves DDL authority with this rename
+    if (commitDirectives.value.exists(_.startsWith("#ddl\t"))) GraftDdl.invalidate(fs, rootP)
   }
 
   /** The cross-writer MUTUAL-EXCLUSION primitive the whole commit protocol
@@ -1605,9 +1607,8 @@ object ManifestTable {
       : Option[(Seq[PartSpec], Seq[(Seq[Any], Seq[(String, Long)])])] = {
     val (fs, rootP) = fsOf(spark, root)
     if (dvOf(fs, rootP, v).isDefined) return None
-    val leaves: Seq[PartSpec] = GraftDdl.load(spark, root).flatMap(d =>
-      for { sch <- d.schema; rd <- d.partCol } yield PartSpec.parse(rd, sch))
-      .map(_.leaves).getOrElse(return None)
+    val leaves: Seq[PartSpec] =
+      PartSpecs.currentOf(spark, root).map(_.leaves).getOrElse(return None)
     val eligible = leaves.nonEmpty &&
       leaves.exists(_.isInstanceOf[PartSpec.Bucket]) &&
       leaves.forall {
@@ -2268,7 +2269,12 @@ object ManifestTable {
     * files) or unpartitioned.
     */
   private def stageWrite(df: DataFrame, spec: Option[PartSpec], stage: Path,
-                         root: String): Unit =
+                         root: String): Unit = {
+    // committer v2 (below) is only safe without speculative attempts
+    require(!df.sparkSession.conf.get("spark.speculation", "false").toBoolean,
+      s"staged write to $root refused: spark.speculation is enabled, and a speculative " +
+        "duplicate attempt's part files could survive into the published stage under " +
+        "the v2 file-output committer — disable spark.speculation for graft writes")
     spec match {
       case Some(s) =>
         val derived = s.derive(df)
@@ -2307,10 +2313,8 @@ object ManifestTable {
         // task-commit failure mid-rename aborts the JOB loudly (rename onto
         // an existing file fails) and the whole stage is discarded — safe —
         // but with spark.speculation enabled, a dead attempt's orphan part
-        // files could survive inside a stage that later publishes. Keep
-        // speculation OFF on manifest-table write paths (it defaults off;
-        // the deterministic hash repartition above gives retried tasks
-        // identical content either way).
+        // files could survive inside a stage that later publishes, which
+        // is why this method refuses to run under speculation.
         out.write.partitionBy(s.physNames: _*)
           .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
           .mode("overwrite").parquet(stage.toString)
@@ -2318,6 +2322,7 @@ object ManifestTable {
         .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
         .mode("overwrite").parquet(stage.toString)
     }
+  }
 
   // DECLARED (sidecar) tables only — they own the property that opts out;
   // path-first tables keep the legacy task-per-dir write byte-for-byte

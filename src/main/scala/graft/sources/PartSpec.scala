@@ -401,62 +401,23 @@ object PartSpec {
     }
 }
 
-/** Sidecar-backed spec resolution for a table root: the CURRENT spec from
-  * the sidecar's `partCol` (rendered form) plus prior specs from the
-  * `graft.partSpecHistory` property — memoized per (root, sidecar stamp)
-  * like [[FieldIds.of]], so the per-read cost is one `getFileStatus`.
-  * Roots without a sidecar (path-first manifest tables) have no specs and
-  * keep the legacy identity behavior everywhere.
+/** Partition specs of a table root, read off [[GraftDdl.load]]'s resolved
+  * sidecar: the CURRENT spec from the sidecar's `partCol` (rendered form)
+  * plus prior specs from the `graft.partSpecHistory` property. Roots
+  * without a sidecar (path-first manifest tables) have no specs and keep
+  * the legacy identity behavior everywhere.
   */
 object PartSpecs {
   val HistoryProp = "graft.partSpecHistory"
 
-  private val memo = java.util.Collections.synchronizedMap(
-    new java.util.HashMap[String, ((Long, Long), Seq[PartSpec])]())
-
   /** Current-first: head (if any) is the active spec, tail the history
-    * (newest first). Pruning matches directories against ALL of them by
-    * physical column name.
+    * (newest first) — [[GraftDdl.Ddl.partSpecs]].
     */
-  def of(spark: SparkSession, root: String): Seq[PartSpec] = {
-    val p = new org.apache.hadoop.fs.Path(root, GraftDdl.FileName)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stamp =
-      try { val st = fs.getFileStatus(p); (st.getModificationTime, st.getLen) }
-      catch { case _: java.io.FileNotFoundException => (-1L, -1L) }
-    memo.get(root) match {
-      case (`stamp`, specs) => specs
-      case _ =>
-        // full load only on miss (first touch per process / sidecar change);
-        // a staged-#ddl RTAS authority is honored like FieldIds.of does
-        val specs =
-          if (stamp == ((-1L, -1L)) && !hasStaged(fs, root)) Seq.empty[PartSpec]
-          else GraftDdl.load(spark, root).toSeq.flatMap { d =>
-            d.schema.toSeq.flatMap { sch =>
-              val cur = d.partCol.map(r => PartSpec.parse(r, sch))
-              val hist = parseHistory(d.props).map(r => PartSpec.parse(r, sch))
-              cur.toSeq ++ hist
-            }
-          }
-        memo.put(root, (stamp, specs))
-        specs
-    }
-  }
-
-  private def hasStaged(fs: org.apache.hadoop.fs.FileSystem, root: String): Boolean = {
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    fs.exists(rootP) && fs.listStatus(rootP).exists { st =>
-      val n = st.getPath.getName
-      n.startsWith(GraftDdl.StagedPrefix) && n.endsWith(".json")
-    }
-  }
+  def of(spark: SparkSession, root: String): Seq[PartSpec] =
+    GraftDdl.load(spark, root).toSeq.flatMap(_.partSpecs)
 
   def currentOf(spark: SparkSession, root: String): Option[PartSpec] =
-    of(spark, root).headOption
-
-  def invalidate(root: String): Unit = memo.synchronized {
-    memo.keySet.removeIf((k: String) => k.startsWith(root))
-  }
+    GraftDdl.load(spark, root).flatMap(_.partSpec)
 
   def parseHistory(props: Map[String, String]): Seq[String] =
     props.get(HistoryProp).toSeq.flatMap { json =>

@@ -55,9 +55,7 @@ object SchemaEvolve {
       s"mergeSchema: $root has no DDL sidecar — only declared-schema tables evolve"))
     val declared = d.schema.getOrElse(throw new IllegalStateException(
       s"mergeSchema: $root's sidecar declares no schema"))
-    val specLeaves: Seq[PartSpec] =
-      (d.partCol.toSeq ++ PartSpecs.parseHistory(d.props))
-        .flatMap(r => PartSpec.parse(r, declared).leaves)
+    val specLeaves: Seq[PartSpec] = d.partSpecs.flatMap(_.leaves)
     val bucketSources = specLeaves.collect { case b: PartSpec.Bucket => b.source }.toSet
     val specPhys = specLeaves.filterNot(_.isIdentity).map(_.physName).toSet
     val merged = mergeStruct(declared, incoming, "", bucketSources)

@@ -846,7 +846,7 @@ class CatalogSpec extends SparkSuite {
     import spark.implicits._
     import java.nio.file.{Files => JFiles}
     val t = freshTable("fid10")
-    spark.sql(s"INSERT INTO $t VALUES (1, 'a', 'x')") // warms FieldIds memo {v->id}
+    spark.sql(s"INSERT INTO $t VALUES (1, 'a', 'x')") // warms the DDL memo {v->id}
     val sidecar = new java.io.File(s"$wh/db/fid10/_ddl.json").toPath
     val originalBytes = JFiles.readAllBytes(sidecar)
     // capture the RENAMED sidecar, then restore the original so the memo
@@ -856,7 +856,7 @@ class CatalogSpec extends SparkSuite {
     def installOutOfBand(bytes: Array[Byte]): Unit = {
       // byte-for-byte what a foreign process's GraftDdl.save does: a
       // Hadoop-FS temp write + rename (keeps the LocalFileSystem CRC
-      // sidecar in sync), WITHOUT this process's FieldIds.invalidate hook
+      // sidecar in sync), WITHOUT this process's GraftDdl.invalidate hook
       val p = new org.apache.hadoop.fs.Path(sidecar.toString)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val tmp = new org.apache.hadoop.fs.Path(p.getParent, "._ddl-oob.tmp")
@@ -877,6 +877,99 @@ class CatalogSpec extends SparkSuite {
     spark.sql(s"INSERT INTO $t VALUES (3, 'c', 'x')")
     assert(spark.table(t).select("k", "label").as[(Long, String)].collect().toSet
       == Set((1L, "a"), (2L, "b"), (3L, "c")))
+  }
+
+  test("an orphan staged DDL on a sidecar-less root is inert debris (ADVICE r22)") {
+    import spark.implicits._
+    import java.nio.file.{Files => JFiles, Paths}
+    val base = JFiles.createTempDirectory("graft-orphan-ddl").toString
+    ManifestTable.commit(Seq((1L, "a")).toDF("k", "v"), s"$base/src", None)
+    // move the table to a root this process has never resolved, so the
+    // read below is its first touch (an earlier touch could serve a
+    // memoized answer and hide the orphan)
+    val root = s"$base/t"
+    JFiles.move(Paths.get(base, "src"), Paths.get(root))
+    // a crashed-before-commit RTAS left a staged DDL that no manifest
+    // names — one that would rename v and declare ids if it were honored
+    val orphanSchema = new org.apache.spark.sql.types.StructType()
+      .add("k", org.apache.spark.sql.types.LongType)
+      .add("label", org.apache.spark.sql.types.StringType)
+    val m = new com.fasterxml.jackson.databind.ObjectMapper()
+    val node = m.createObjectNode()
+    node.put("schema", orphanSchema.json)
+    node.putObject("props").put("graft.fieldIds", """{"k":1,"label":2}""")
+    val orphan = Paths.get(root, ".ddl-orphan.json")
+    JFiles.write(orphan, m.writeValueAsBytes(node))
+    val schema = Seq((0L, "")).toDF("k", "v").schema
+    // the root stays id-less: the read resolves by name, and the commit
+    // attaches no ids (an honored id map would refuse `v` as schema drift)
+    assert(ManifestTable.read(spark, root, schema).as[(Long, String)].collect().toSet
+      == Set((1L, "a")))
+    ManifestTable.commit(Seq((2L, "b")).toDF("k", "v"), root, None) // unpartitioned: a snapshot
+    assert(ManifestTable.read(spark, root, schema).as[(Long, String)].collect().toSet
+      == Set((2L, "b")))
+    assert(JFiles.exists(orphan), "an orphan is never promoted")
+    assert(!JFiles.exists(Paths.get(root, "_ddl.json")))
+  }
+
+  test("an out-of-band #ddl authority (another process's RTAS) is served and promoted") {
+    import spark.implicits._
+    import java.nio.file.{Files => JFiles, Paths}
+    val t = freshTable("fid10b")
+    val root = s"$wh/db/fid10b"
+    spark.sql(s"INSERT INTO $t VALUES (1, 'a', 'x')")
+    val sidecar = Paths.get(root, "_ddl.json")
+    val originalBytes = JFiles.readAllBytes(sidecar)
+    spark.sql(s"ALTER TABLE $t RENAME COLUMN v TO label")
+    val renamedBytes = JFiles.readAllBytes(sidecar)
+    // put the pre-rename sidecar back as another process would (Hadoop-FS
+    // temp write + rename keeps the CRC shadow in sync), then warm the
+    // resolver on it
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = new org.apache.hadoop.fs.Path(root, "._ddl-oob.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(originalBytes) finally out.close()
+    fs.delete(new org.apache.hadoop.fs.Path(root, "_ddl.json"), false)
+    assert(fs.rename(tmp, new org.apache.hadoop.fs.Path(root, "_ddl.json")))
+    assert(spark.table(t).columns.toSeq == Seq("k", "v", "p"))
+    // the other process's RTAS: a staged DDL plus a manifest naming it,
+    // neither written through this process's commit path (so no
+    // in-process invalidation runs)
+    val staged = ".ddl-oob.json"
+    JFiles.write(Paths.get(root, staged), renamedBytes)
+    val v = ManifestTable.currentVersion(spark, root).get
+    val body = new String(JFiles.readAllBytes(Paths.get(root, f"_manifest.$v%08d")), "UTF-8")
+    JFiles.write(Paths.get(root, f"_manifest.${v + 1}%08d"),
+      (body + s"#ddl\t$staged\n").getBytes("UTF-8"))
+    val df = spark.table(t)
+    assert(df.columns.toSeq == Seq("k", "label", "p"), df.columns.toSeq)
+    assert(df.select("k", "label").as[(Long, String)].collect().toSet == Set((1L, "a")))
+    assert(!JFiles.exists(Paths.get(root, staged)), "the read must promote the staged DDL")
+    assert(new String(JFiles.readAllBytes(sidecar), "UTF-8").contains("label"))
+    spark.sql(s"DROP TABLE $t")
+  }
+
+  test("a staged write refuses to run while spark.speculation is on") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-nospec").toString + "/t"
+    val legacy = "spark.sql.legacy.setCommandRejectsSparkCoreConfs"
+    val prevLegacy = spark.conf.getOption(legacy)
+    val prevSpec = spark.conf.getOption("spark.speculation")
+    spark.conf.set(legacy, "false") // lets a session set a core conf
+    try {
+      spark.conf.set("spark.speculation", "true")
+      val e = intercept[IllegalArgumentException] {
+        ManifestTable.commit(Seq((1L, "a")).toDF("k", "v"), root, None)
+      }
+      assert(e.getMessage.contains("spark.speculation"), e.getMessage)
+      assert(ManifestTable.currentVersion(spark, root).isEmpty)
+    } finally {
+      prevSpec.fold(spark.conf.unset("spark.speculation"))(spark.conf.set("spark.speculation", _))
+      prevLegacy.fold(spark.conf.unset(legacy))(spark.conf.set(legacy, _))
+    }
+    ManifestTable.commit(Seq((1L, "a")).toDF("k", "v"), root, None)
+    assert(ManifestTable.currentVersion(spark, root).contains(1L))
   }
 
   test("SHOW CREATE TABLE renders; column comments are sidecar metadata") {

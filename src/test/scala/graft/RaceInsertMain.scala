@@ -6,9 +6,9 @@ import org.apache.spark.sql.SparkSession
   * (CatalogSpec via MultiProcessCommitSpec's harness pattern): the parent
   * JVM rewrites the table's `_ddl.json` sidecar (RENAME COLUMN rounds)
   * while THIS process commits through its own SparkSession + catalog
-  * instance — its [[graft.sources.FieldIds]] memo must refresh by sidecar
-  * stamp, never by in-process invalidation (the cross-process path the
-  * single-JVM tests can't reach).
+  * instance — its DDL resolver's memo ([[graft.sources.GraftDdl]]) must
+  * refresh by the root listing's stamp, never by in-process invalidation
+  * (the cross-process path the single-JVM tests can't reach).
   *
   * Each round re-plans `INSERT INTO ... VALUES` against the table's
   * CURRENT schema (positional values, so renames don't change the row).
